@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared plumbing for the driver-facing mains (Bench / Verify /
-  * ScaleProbe) so config tweaks land once, not three times. */
+/** Shared plumbing for the driver-facing mains (Bench / Verify and the
+  * tools beside them) so config tweaks land once, not once per main. */
 object Harness {
 
   /** Local session at SPARK_GRAFT_CPUS (default 32, the driver's target

@@ -39,8 +39,7 @@ object Dedup {
 
   /** MinHash signatures: 8 hash slots from two md5 draws per 8-char
     * shingle (4 independent 32-bit chunks each), min-aggregated per doc.
-    * Takes any (doc_id, text) frame — shared by the keyed pipeline and
-    * the ScaleProbe replication experiment. */
+    * Takes any (doc_id, text) frame. */
   def signaturesOf(docs: DataFrame): DataFrame = {
     // Kept as codegen explode + groupBy(doc_id), deliberately NOT the
     // per-row array-transform form (r19 A/B): all 8 slots are plain
@@ -316,13 +315,13 @@ object Dedup {
     * expected RANDOM cross-group candidates are blocks·N²/2^(bits+1):
     * 8×4-bit nibbles gave 8·N²/2⁵ = N²/4, 4×8-bit bytes give N²/128
     * (theoretical 32× fewer on uniform data) with HALF the block rows.
-    * Measured over the shipped collapsed distinct-signature frame at
-    * 1×/5×/25×/50× corpora (SIMHASH_CANDIDATES.json): identical
-    * output set, byte blocking 2.32M raw join rows vs nibble 19.2M —
-    * 8.3× less raw work at every point (true-near-dup candidates,
-    * which both blockings must emit, dominate the testdata corpus;
-    * the nibble blocking's extra 8.3× is pure random-collision
-    * waste). */
+    * Measured once over the shipped collapsed distinct-signature frame
+    * at 1×/5×/25×/50× replica corpora (a one-off run, not re-checked
+    * by any gate): identical output set, byte blocking 2.32M raw join
+    * rows vs nibble 19.2M — 8.3× less raw work at every point
+    * (true-near-dup candidates, which both blockings must emit,
+    * dominate the testdata corpus; the nibble blocking's extra 8.3× is
+    * pure random-collision waste). */
   def hammingBlocksOf(sig: DataFrame, idCols: Seq[String] = Seq("doc_id")): DataFrame =
     (0 until 4).map { i =>
         val kept = idCols.map(col) ++ Seq(col("simhash"),
@@ -344,8 +343,8 @@ object Dedup {
     * group (a boilerplate page duplicated millions of times — or the
     * replica scale corpus, where every doc has k−1 exact signature
     * partners) contributes ONE row per block instead of g, so the
-    * candidate join's raw volume is group-size-INVARIANT: measured
-    * (SIMHASH_CANDIDATES.json, ScaleProbe over the EXACT stages below)
+    * candidate join's raw volume is group-size-INVARIANT: a one-off
+    * replication run over the EXACT stages below measured
     * 4,711 distinct signatures and 2,315,839 raw block-join rows at
     * 1×/5×/25×/50× replica corpora ALIKE, where the per-document join
     * grew 2.8M → 70M → 1.76B over 1×/5×/25×. The contracted k²
@@ -399,9 +398,7 @@ object Dedup {
 
   /** Collapsed candidate stage of [[simhashPairsOf]]: verified
     * signature-level pairs (s1 < s2, hamming ∈ [1, 3]) over the
-    * DISTINCT signature values of `sig`. Exposed — like [[ngramPhase1]]
-    * — so ScaleProbe measures the exact shipped plan, never a
-    * probe-only re-derivation that could drift. */
+    * DISTINCT signature values of `sig`. */
   def simhashSigPairsOf(sig: DataFrame): DataFrame = {
     // byte-block pigeonhole over the DISTINCT signatures (s1 < s2
     // replaces doc_id ordering — any total order on the collapsed key
@@ -468,15 +465,13 @@ object Dedup {
     * candidates share ≥10 shingles with document frequency in [2, 20];
     * Jaccard emitted as exact floor-scaled micro units; threshold ≥ 0.3
     * applied as a pure integer comparison. */
-  /** Rare-shingle phase 1 of ngram_jaccard, exposed so ScaleProbe can
-    * measure its replication curve with the exact shipped plan (no
-    * probe-only re-derivation that could drift): returns the per-doc
+  /** Rare-shingle phase 1 of ngram_jaccard: returns the per-doc
     * DISTINCT shingle arrays (checkpointed in array form — more compact
     * than exploded rows, and phase 2 consumes the arrays directly) and
     * the ≥10-shared-rare candidate pair list.
     *
-    * Measured (`runMain graft.ScaleProbe ngram`, sf0.01 corpus
-    * replicated k×, replicas = exact near-dup groups): 1.9 s → 2.0 s →
+    * Measured once (sf0.01 corpus replicated k×, replicas = exact
+    * near-dup groups; not re-checked by any gate): 1.9 s → 2.0 s →
     * 3.3 s at k = 2/4/8 (the k=1 run absorbs JIT warmup) — runtime
     * near-linear in corpus size while candidate output follows the
     * k(k−1)/2-per-group growth near-dup data intrinsically implies
@@ -526,8 +521,8 @@ object Dedup {
   val ngramJaccard = QuerySpec(
     "ngram_jaccard",
     (s, d) => {
-      // phase 1 (shared with ScaleProbe's ngram curve): per-doc distinct
-      // shingle arrays + rare-shingle candidate pairs
+      // phase 1: per-doc distinct shingle arrays + rare-shingle
+      // candidate pairs
       val (arr, cand) = ngramPhase1(documents(s, d))
       // phase 2 (r20 — the minhash_sim_est array_intersect pattern):
       // exact intersection per candidate pair over the per-doc DISTINCT

@@ -204,6 +204,15 @@ def _latest_quiet_pair():
     return same[-2:] if len(same) >= 2 else None
 
 
+def phantom_mains(text, exists):
+    """Names of `graft.<Name>` entry points cited in a doc whose source
+    file src/main/scala/graft/<Name>.scala does not exist (empty = pass).
+    `exists` is the path predicate, so the self-test can fake a tree."""
+    names = sorted(set(re.findall(r"\bgraft\.([A-Z]\w*)", text)))
+    return [n for n in names
+            if not exists(f"src/main/scala/graft/{n}.scala")]
+
+
 readme = open("README.md").read()
 
 if "--selftest-drift" in sys.argv:
@@ -267,12 +276,19 @@ if "--selftest-drift" in sys.argv:
     assert old and "predates" in old[0], old
     print("selftest-oracle-canary: slow key flagged, sub-floor blip "
           "suppressed, timing-less artifact flagged as pre-canary")
+    # phantom-main gate: a cited main without a source file must flag;
+    # lower-case package paths (graft.ops.Etl) are not entry points
+    cited = "run `graft.Bench`, then `graft.GoneProbe`; see graft.ops.Etl"
+    got = phantom_mains(cited, lambda p: p.endswith("/Bench.scala"))
+    assert got == ["GoneProbe"], got
+    print("selftest-phantom-main: a cited main with no source file is "
+          "flagged, an existing one passes")
     sys.exit(0)
 
 # phantom-evidence gate (VERDICT r17 task 7): every artifact README or
 # SURVEY names as committed must exist in the repo — a doc citing a file
 # that isn't there (or naming it "committed" before the commit) is the
-# round-17 SKEW_SCALE/SCALE_DELTA class: claims must match evidence.
+# round-17 phantom-artifact class: claims must match evidence.
 for doc in ("README.md", "SURVEY.md"):
     txt = open(doc).read()
     for m in re.finditer(r"committed as\s+`([A-Za-z0-9_./]+\.json)`", txt):
@@ -281,6 +297,12 @@ for doc in ("README.md", "SURVEY.md"):
             print(f"DRIFT {doc}: claims artifact `{p}` is committed but "
                   f"the file does not exist")
             ok = False
+    # phantom-main gate: a cited `graft.<Name>` entry point must still
+    # have its source file — prose must not outlive a deleted main
+    for n in phantom_mains(txt, os.path.exists):
+        print(f"DRIFT {doc}: cites entry point `graft.{n}` but "
+              f"src/main/scala/graft/{n}.scala does not exist")
+        ok = False
 
 pair = _latest_quiet_pair()
 if pair:
