@@ -8,7 +8,11 @@ package graft
   * 75+ query keys the full per-query map no longer fits: full detail (3-dp
   * per-query timings) is written to BENCH_FULL.json instead, and the stdout
   * line carries the slowest keys only, trimming fastest-first until it
-  * fits, with `queries_omitted` recording how many were dropped.
+  * fits, with `queries_omitted` recording how many were dropped. A
+  * key-filtered run (SPARK_GRAFT_BENCH_KEYS) is a partial record: it
+  * writes BENCH_FILTERED.json, whose `key_filter` field names the keys,
+  * and leaves BENCH_FULL.json alone (tools/merge_bench_keys.py merges
+  * the filtered rows into a full record with provenance).
   *
   * SELF-DEFENDING TIMING: a RECORDED warmup pass (SPARK_GRAFT_BENCH_WARMUP,
   * default 1; `warmup_total` in BENCH_FULL.json) runs the whole key loop
@@ -207,8 +211,12 @@ object Bench {
     val master = spark.sparkContext.master
     val shuffle = spark.conf.get("spark.sql.shuffle.partitions")
 
-    // sample once: BENCH_FULL.json and the stdout line must agree
+    // sample once: the detail file and the stdout line must agree
     val loadAfter = loadAvg
+    val detailFile =
+      if (keyFilter.isDefined) "BENCH_FILTERED.json" else "BENCH_FULL.json"
+    val keyFilterJs = keyFilter.fold("")(ks =>
+      ks.toSeq.sorted.map("\"" + _ + "\"").mkString("\"key_filter\":[", ",", "],"))
     def fmt(v: Double, dp: Int): String =
       BigDecimal(v).setScale(dp, BigDecimal.RoundingMode.HALF_UP)
         .bigDecimal.stripTrailingZeros.toPlainString
@@ -222,7 +230,7 @@ object Bench {
         s""""sf":"$sfDir","master":"$master","shuffle_partitions":$shuffle,""" +
         s""""passes":$passes,"pass_totals":${arr(passTotals, 1)},""" +
         s""""failed":$failed,"load_avg_before":${fmt(loadBefore, 1)},""" +
-        s""""load_avg":${fmt(loadAfter, 1)},"detail":"BENCH_FULL.json"}"""
+        s""""load_avg":${fmt(loadAfter, 1)},"detail":"$detailFile"}"""
     }
 
     // full-precision record for humans / the judge (repo-root file).
@@ -301,7 +309,7 @@ object Bench {
       // "action" names the measured work (Harness.exhaust = full-plan
       // noop sink) so tooling can refuse cross-protocol comparisons —
       // pre-r17 records measured count()-pruned plans and carry no field
-      s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","action":"exhaust","queries":$fullQs,""" +
+      s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","action":"exhaust",$keyFilterJs"queries":$fullQs,""" +
         s""""stages":$stages,"pass_spread":$spreadJs,""" +
         s""""shuffle_bytes":$bytesJs,""" +
         s""""codegen_compile_sec":${fmt(cgSec, 1)},"codegen_compiled_classes":$cgCount,""" +
@@ -315,7 +323,7 @@ object Bench {
         s""""warmup_passes":$warmups,"warmup_total":${fmt(warmupTotal, 3)},""" +
         s""""warmup_load_avg":${arr(warmupRuns.map(_._1), 1)},""" +
         s""""failed":$failed,"load_avg_before":${fmt(loadBefore, 1)},"load_avg":${fmt(loadAfter, 1)}}"""
-    try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
+    try java.nio.file.Files.write(java.nio.file.Paths.get(detailFile),
       (full + "\n").getBytes("UTF-8"))
     catch { case e: Throwable => System.err.println(s"[bench] full dump failed: $e") }
 

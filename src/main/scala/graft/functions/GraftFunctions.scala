@@ -39,4 +39,8 @@ object GraftFunctions {
   /** Column-level API: `quantDot($"a", $"b")`. */
   def quantDot(a: Column, b: Column): Column =
     bridge.column(QuantDot(bridge.expression(a), bridge.expression(b)))
+
+  /** Column-level API: `minhashSlots($"text")`, a `struct<h0..h7>`. */
+  def minhashSlots(text: Column): Column =
+    bridge.column(MinhashSlots(bridge.expression(text)))
 }

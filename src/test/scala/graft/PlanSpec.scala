@@ -668,4 +668,20 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("ShuffledHashJoin"), s"join discipline lost:\n$p")
     assert(!p.contains("SortMergeJoin"), s"degraded to SMJ:\n$p")
   }
+
+  test("minhash signatures: one kernel projection per document above the scan's fan-out") {
+    val df = llm.Dedup.signaturesOf(Tables.documents(spark, sf))
+    val p = df.queryExecution.executedPlan.toString
+    // no shingle explode, no sort, no aggregate: per-document map work
+    for (op <- Seq("Generate", "Sort", "Aggregate"))
+      assert(!p.contains(op), s"signature build carries $op:\n$p")
+    // the only exchange is documents()'s small-file fan-out repartition
+    val exchanges = p.linesIterator.filter(_.contains("Exchange")).toSeq
+    assert(exchanges.forall(_.contains("RoundRobinPartitioning")),
+      s"signature build shuffles:\n$p")
+    // the kernel runs once per row: CollapseProject must not inline the
+    // struct into each of the 8 field reads
+    assert("minhash_slots\\(".r.findAllIn(p).size == 1,
+      s"minhash_slots is not evaluated exactly once per row:\n$p")
+  }
 }

@@ -7,19 +7,26 @@ copy of sf0.001, run graft.Verify on it, and DuckDB-compare every key.
 
 Divergences the fixed corpus masks (e.g. a regex that Spark and DuckDB
 parse differently) fail HERE even though the driver's gate can't see
-them. Usage: python3 tools/fuzz_check.py [seed]
+them. Usage: python3 tools/fuzz_check.py [--out PATH]
+
+--out names the verdict artifact (default FUZZ_CORRECTNESS.json at the
+repo root). The spliced corpus and Verify's output go to a fresh
+temporary directory per run, removed on exit, so concurrent runs (e.g.
+from two checkouts) never share or clobber each other's inputs.
 """
+import argparse
 import json
 import os
 import shutil
 import subprocess
 import sys
+import tempfile
 from pathlib import Path
 
 import duckdb
 
+ROOT = Path(__file__).resolve().parent.parent
 BASE = Path("/root/testdata/sf0.001")
-WORK = Path("/tmp/graft_fuzz")
 
 
 def adversarial_docs():
@@ -143,29 +150,36 @@ def adversarial_events():
 
 
 def main():
-    if WORK.exists():
-        shutil.rmtree(WORK)
-    WORK.mkdir(parents=True)
+    ap = argparse.ArgumentParser(description="adversarial-corpus oracle gate")
+    ap.add_argument("--out", default=str(ROOT / "FUZZ_CORRECTNESS.json"),
+                    help="verdict artifact path (default: %(default)s)")
+    args = ap.parse_args()
+    with tempfile.TemporaryDirectory(prefix="graft_fuzz_") as tmp:
+        return run(Path(tmp) / "data", Path(tmp) / "out", Path(args.out))
+
+
+def run(work, out, art_path):
+    work.mkdir(parents=True)
     # copy every base table, then replace documents + embeddings with the
     # adversarial sets
     for f in BASE.glob("*.parquet"):
-        shutil.copy(f, WORK / f.name)
+        shutil.copy(f, work / f.name)
     con = duckdb.connect()
     con.execute(
         "CREATE TABLE d (doc_id BIGINT, text VARCHAR, lang VARCHAR, "
         "source VARCHAR, n_chars BIGINT)")
     con.executemany("INSERT INTO d VALUES (?, ?, ?, ?, ?)", adversarial_docs())
-    con.execute(f"COPY d TO '{WORK}/documents.parquet' (FORMAT PARQUET)")
+    con.execute(f"COPY d TO '{work}/documents.parquet' (FORMAT PARQUET)")
     con.execute(
         "CREATE TABLE e (vec_id BIGINT, embedding FLOAT[], label INTEGER)")
     con.executemany("INSERT INTO e VALUES (?, ?, ?)", adversarial_embeddings())
-    con.execute(f"COPY e TO '{WORK}/embeddings.parquet' (FORMAT PARQUET)")
+    con.execute(f"COPY e TO '{work}/embeddings.parquet' (FORMAT PARQUET)")
     con.execute(
         "CREATE TABLE ev (event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
         "event_type VARCHAR, value DOUBLE, props VARCHAR)")
     con.executemany("INSERT INTO ev VALUES (?, ?, ?, ?, ?, ?)",
                     adversarial_events())
-    con.execute(f"COPY ev TO '{WORK}/events.parquet' (FORMAT PARQUET)")
+    con.execute(f"COPY ev TO '{work}/events.parquet' (FORMAT PARQUET)")
 
     # adversarial relational rows APPENDED to the copies (the base data
     # stays so every key remains meaningful): NULL dates/keys/amounts,
@@ -180,7 +194,7 @@ def main():
           (900003, 1,      'F', -42.42, NULL,                            'FUZZ'),
           (900004, 999999, 'F', 0.01,   TIMESTAMP '1997-06-18 00:00:00', 'FUZZ')
         ) t(o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate, o_orderpriority)
-      ) TO '{WORK}/orders.parquet' (FORMAT PARQUET)""")
+      ) TO '{work}/orders.parquet' (FORMAT PARQUET)""")
     con.execute(f"""
       COPY (
         SELECT * FROM read_parquet('{BASE}/customer.parquet')
@@ -190,7 +204,7 @@ def main():
           (910002, 'Fuzz NullBal',    1,    NULL,   'FUZZ'),
           (910003, 'Fuzz Negative',   2,    -99.99, 'FUZZ')
         ) t(c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment)
-      ) TO '{WORK}/customer.parquet' (FORMAT PARQUET)""")
+      ) TO '{work}/customer.parquet' (FORMAT PARQUET)""")
     con.execute(f"""
       COPY (
         SELECT * FROM read_parquet('{BASE}/lineitem.parquet')
@@ -203,7 +217,7 @@ def main():
           (900005, NULL, NULL, 3, 1.00, 10.00, 0.0, 0.0, 'N', 'O', TIMESTAMP '1997-06-22 00:00:00')
         ) t(l_orderkey, l_partkey, l_suppkey, l_linenumber, l_quantity, l_extendedprice,
             l_discount, l_tax, l_returnflag, l_linestatus, l_shipdate)
-      ) TO '{WORK}/lineitem.parquet' (FORMAT PARQUET)""")
+      ) TO '{work}/lineitem.parquet' (FORMAT PARQUET)""")
 
     # part rows stress fuzzy_link's deletion-neighborhood linkage
     # (codepoint-exact substring/levenshtein parity on multibyte names),
@@ -223,7 +237,7 @@ def main():
           (920006, 'cold widget',     'Brand#92', 'FUZZ', NULL, NULL),
           (920007, 'cold widget',     'Brand#92', 'FUZZ', 6,    -1.00)
         ) t(p_partkey, p_name, p_brand, p_type, p_size, p_retailprice)
-      ) TO '{WORK}/part.parquet' (FORMAT PARQUET)""")
+      ) TO '{work}/part.parquet' (FORMAT PARQUET)""")
 
     # supplier + nation rows stress the graph family (pagerank groups
     # nations by region; a NULL n_regionkey node must drop out of the
@@ -238,7 +252,7 @@ def main():
           (930002, 'Fuzz ürü 供应商',          1,    NULL),
           (930003, NULL,                       2,    -0.005)
         ) t(s_suppkey, s_name, s_nationkey, s_acctbal)
-      ) TO '{WORK}/supplier.parquet' (FORMAT PARQUET)""")
+      ) TO '{work}/supplier.parquet' (FORMAT PARQUET)""")
     con.execute(f"""
       COPY (
         SELECT * FROM read_parquet('{BASE}/nation.parquet')
@@ -247,13 +261,11 @@ def main():
           (940001, 'FUZZ_NULL_REGION', NULL),
           (940002, 'FUZZ_LONE_REGION', 99)
         ) t(n_nationkey, n_name, n_regionkey)
-      ) TO '{WORK}/nation.parquet' (FORMAT PARQUET)""")
+      ) TO '{work}/nation.parquet' (FORMAT PARQUET)""")
 
-    out = "/tmp/graft_fuzz_out"
-    # stale outputs from a previous run would be silently compared when a
-    # query THROWS (Verify's overwrite never happens for failed keys)
-    if Path(out).exists():
-        shutil.rmtree(out)
+    # `out` is fresh per run: stale outputs from a previous run would be
+    # silently compared when a query THROWS (Verify's overwrite never
+    # happens for failed keys)
     print(f"[fuzz] {con.sql('SELECT count(*) FROM d').fetchone()[0]} adversarial docs; running Verify...")
     # run_main.sh (plain java over compiled classes), not sbt: no target
     # lock to deadlock against a concurrent sbt, and no recompile — so a
@@ -263,10 +275,10 @@ def main():
     # FUZZ_ALLOW_STALE=1 overrides for deliberate frozen-snapshot runs
     # (the GRAFT_CLASSES bench-chain pattern).
     src_mt = max((p.stat().st_mtime
-                  for p in Path("/root/repo/src/main").rglob("*.scala")),
+                  for p in (ROOT / "src" / "main").rglob("*.scala")),
                  default=0.0)
     cls_dir = Path(os.environ.get("GRAFT_CLASSES",
-                                  "/root/repo/target/scala-2.13/classes"))
+                                  ROOT / "target" / "scala-2.13" / "classes"))
     cls_mt = max((p.stat().st_mtime for p in cls_dir.rglob("*.class")),
                  default=0.0)
     if src_mt > cls_mt and os.environ.get("FUZZ_ALLOW_STALE") != "1":
@@ -277,8 +289,8 @@ def main():
               "run")
         sys.exit(2)
     r = subprocess.run(
-        ["tools/run_main.sh", "graft.Verify", str(WORK), out],
-        cwd="/root/repo", capture_output=True, text=True, timeout=900)
+        ["tools/run_main.sh", "graft.Verify", str(work), str(out)],
+        cwd=ROOT, capture_output=True, text=True, timeout=900)
     # only genuine key failures ("[verify] <key> failed: ...") gate the
     # exit code — Verify also prints informational "[verify] stage built
     # once" lines. Anchor on the failure marker itself: excluding the
@@ -288,18 +300,18 @@ def main():
              if "[verify]" in l and "failed:" in l]
     for l in fails:
         print(l)
-    if r.returncode != 0 and not Path(f"{out}/oracle_sql.json").exists():
+    if r.returncode != 0 and not (out / "oracle_sql.json").exists():
         print("[fuzz] Verify crashed"); sys.exit(2)
-    verdicts_p = f"{out}/verdicts.json"
+    verdicts_p = out / "verdicts.json"
     rc = subprocess.run(
-        [sys.executable, "/root/repo/tools/oracle_check.py", str(WORK), out,
-         verdicts_p]).returncode
+        [sys.executable, str(ROOT / "tools" / "oracle_check.py"), str(work),
+         str(out), str(verdicts_p)]).returncode
     # standing artifact (VERDICT r10 task 2): the per-key verdicts on the
     # adversarial corpus, committed and drift-gated by tools/docs_check.py
     # — a regression in any regex/NULL path is visible at HEAD instead of
     # only between manual runs. Written red or green (a red artifact is
     # honest evidence); the exit code still gates.
-    verdicts = json.loads(Path(verdicts_p).read_text())
+    verdicts = json.loads(verdicts_p.read_text())
     art = {
         "artifact": "FUZZ_CORRECTNESS",
         "base_sf": str(BASE),
@@ -315,11 +327,10 @@ def main():
                       if v.get("hash_match") and not v.get("err")),
         "queries": verdicts,
     }
-    Path("/root/repo/FUZZ_CORRECTNESS.json").write_text(
-        json.dumps(art, indent=None) + "\n")
-    print(f"[fuzz] FUZZ_CORRECTNESS.json: {art['passed']}/{art['total']}")
-    sys.exit(1 if (rc or fails) else 0)
+    art_path.write_text(json.dumps(art, indent=None) + "\n")
+    print(f"[fuzz] {art_path.name}: {art['passed']}/{art['total']}")
+    return 1 if (rc or fails) else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

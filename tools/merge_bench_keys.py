@@ -29,6 +29,10 @@ def main(full_p, filt_p, keys_csv):
     keys = [k.strip() for k in keys_csv.split(",") if k.strip()]
     if not keys:
         sys.exit("no keys given")
+    if "key_filter" in full:
+        sys.exit(f"{full_p} is a key-filtered record (key_filter="
+                 f"{full['key_filter']}), not a full one — merge into a "
+                 "full-suite BENCH_FULL.json")
     if full.get("sf") != filt.get("sf"):
         sys.exit(f"sf dir mismatch: full={full.get('sf')} "
                  f"filtered={filt.get('sf')} — a merged row must be "
@@ -87,17 +91,20 @@ def _selftest():
     assert out["queries"]["y"] == 2.0 and out["value"] == 3.0
     assert out["failed"] == 0 and out["merged_keys"] == ["y"]
     assert out["shuffle_bytes"]["y"] == {"write": 7}
-    # refusals: sf mismatch, pass-count mismatch, failed filtered key
-    for bad in ({**filt, "sf": "b"}, {**filt, "passes": 1},
-                {**filt, "queries": {"y": -1.0}}):
+    # refusals: sf mismatch, pass-count mismatch, failed filtered key,
+    # a filtered record passed as the full one
+    for base, bad in ((full, {**filt, "sf": "b"}), (full, {**filt, "passes": 1}),
+                      (full, {**filt, "queries": {"y": -1.0}}),
+                      ({**full, "key_filter": ["x"]}, filt)):
         try:
-            run(copy.deepcopy(full), bad, "y")
+            run(copy.deepcopy(base), bad, "y")
         except SystemExit:
             pass
         else:
             raise AssertionError(f"merge accepted invalid input: {bad}")
     print("selftest: replaces -1 rows, recomputes value/failed, records "
-          "provenance; refuses sf/pass mismatches and failed keys")
+          "provenance; refuses sf/pass mismatches, failed keys and a "
+          "filtered record as the full one")
 
 
 if __name__ == "__main__":
